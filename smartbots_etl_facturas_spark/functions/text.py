@@ -1,6 +1,6 @@
 """Text-analysis column functions for the training-data pipeline
 surface (BASELINE.json north star): tokenization, shingling, quality
-metrics, language-ID voting, fingerprinting.
+metrics, fingerprinting.
 
 All pure Column expressions (JVM-side, codegen-friendly) — no Python
 UDFs in the hot path.
@@ -46,15 +46,6 @@ def shingles_from_tokens(tokens_col: str, n: int = 3) -> Column:
     )
 
 
-def char_ngrams(text_col: str, n: int = 3) -> Column:
-    """Character n-grams from a string column (by name)."""
-    return F.expr(
-        f"CASE WHEN length({text_col}) >= {n} THEN "
-        f"transform(sequence(1, length({text_col}) - {n - 1}), "
-        f"i -> substring({text_col}, i, {n})) ELSE array() END"
-    )
-
-
 def alpha_ratio(text: Column) -> Column:
     alpha = F.length(F.regexp_replace(text, "[^a-z]", "")).cast("double")
     return alpha / F.length(text).cast("double")
@@ -64,11 +55,6 @@ def quality_score(text: Column, stop_lang: str = "en") -> Column:
     """0..1 quality heuristic: stopword density + alphabetic density."""
     stop_ratio = stopword_hits(text, STOPWORDS[stop_lang]).cast("double") / token_count(text)
     return stop_ratio * 0.5 + alpha_ratio(text) * 0.5
-
-
-def lang_votes(text: Column):
-    """Per-language stopword hit counts (dict of Column)."""
-    return {lang: stopword_hits(text, words) for lang, words in STOPWORDS.items()}
 
 
 def fingerprint(text: Column, length: int = 16) -> Column:

@@ -89,13 +89,16 @@ def build_ivfpq_index(
     # trainings, bit-identical to the sequential form
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    inherit = inheritable_thread_target(trainer.sparkSession)
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_coarse = pool.submit(
-            kmeans_centroids, trainer, vec_col, id_col,
+            inherit(kmeans_centroids), trainer, vec_col, id_col,
             k=n_cells, iters=train_iters,
         )
         f_books = pool.submit(
-            pq_codebooks, trainer, vec_col, id_col,
+            inherit(pq_codebooks), trainer, vec_col, id_col,
             m=m, k_sub=k_sub, iters=train_iters,
         )
         coarse = f_coarse.result()

@@ -261,16 +261,20 @@ def cosine_topk_ivfpq(
     # driver threads so the chains' jobs overlap on the cluster
     # (optimization guide §2.6 "overlap independent jobs"); each
     # training is self-contained and deterministic, so the result is
-    # bit-identical to the sequential form.
+    # bit-identical to the sequential form. The threads inherit the
+    # caller's job group, so their jobs stay attributed to it.
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    inherit = inheritable_thread_target(corpus.sparkSession)
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_coarse = pool.submit(
-            kmeans_centroids, corpus, vec_col, id_col,
+            inherit(kmeans_centroids), corpus, vec_col, id_col,
             k=n_cells, iters=train_iters,
         )
         f_books = pool.submit(
-            pq_codebooks, corpus, vec_col, id_col,
+            inherit(pq_codebooks), corpus, vec_col, id_col,
             m=m, k_sub=k_sub, iters=train_iters,
         )
         coarse = f_coarse.result()

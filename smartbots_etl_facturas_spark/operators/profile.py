@@ -95,14 +95,20 @@ def column_profile(
         # same volume the Expand plan shuffled, without the |cols|x
         # row multiplication through the partial aggregate. Results
         # identical: same aggregates, computed per column.
+        # Pool threads get the caller's job group and local properties
+        # through inheritable_thread_target, so their jobs stay
+        # attributed to the calling query.
         from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark import inheritable_thread_target
 
         def _nd(c: str) -> int:
             return df.agg(F.count_distinct(F.col(c))).collect()[0][0]
 
+        inherit = inheritable_thread_target(df.sparkSession)
         with ThreadPoolExecutor(max_workers=min(4, len(cols) + 1)) as pool:
-            base_fut = pool.submit(lambda: df.agg(*aggs).collect()[0])
-            nd_futs = {c: pool.submit(_nd, c) for c in cols}
+            base_fut = pool.submit(inherit(lambda: df.agg(*aggs).collect()[0]))
+            nd_futs = {c: pool.submit(inherit(_nd), c) for c in cols}
             row = base_fut.result()
             nd = {c: f.result() for c, f in nd_futs.items()}
     tidy = [

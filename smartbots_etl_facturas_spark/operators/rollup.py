@@ -1,9 +1,8 @@
-"""A3-A7, O3 — report aggregations and derived-total logic.
+"""A3-A6 — report aggregations and derived-total logic.
 
 References: dtos.py:9-57 (counters/rollup), consolidate_invoices.py:140-145
 (SUCCESS/PARTIAL/ERROR derivation), :418-424 (per-file counts),
-official_format_extractor.py:478-494 (A6 component-sum override),
-transformers.py:16-18 (A7 total-derivation defaults).
+official_format_extractor.py:478-494 (A6 component-sum override).
 """
 
 from __future__ import annotations
@@ -74,14 +73,3 @@ def derived_total(total_col: Column, components: Sequence[Column]) -> Column:
         comp_sum = term if comp_sum is None else comp_sum + term
     return F.when(total_col.isNotNull() & (total_col > 0), total_col).otherwise(comp_sum)
 
-
-def total_defaults(total: Column, net: Column | None, tax: Column | None) -> tuple[Column, Column]:
-    """A7 — when only total is given: net = total, tax = 0."""
-    net_out = F.coalesce(net, total) if net is not None else total
-    tax_out = F.coalesce(tax, F.lit(0)) if tax is not None else F.lit(0)
-    return net_out, tax_out
-
-
-def top_n_errors(errors: DataFrame, order_col: str, n: int = 5) -> DataFrame:
-    """O3 — deterministic first-N error rows (summary truncation)."""
-    return errors.orderBy(F.col(order_col)).limit(n)

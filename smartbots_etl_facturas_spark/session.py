@@ -65,13 +65,3 @@ def get_spark(app_name: str = "smartbots-etl-facturas-spark",
     )
     return builder.getOrCreate()
 
-
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names=TABLES):
-    """Load the driver's parquet tables as a dict of DataFrames."""
-    return {name: spark.read.parquet(f"{sf_dir}/{name}.parquet") for name in names}

@@ -24,10 +24,6 @@ def with_row_idx(df: DataFrame, order_cols: list[str], idx_name: str = "row_idx"
     return df.withColumn(idx_name, F.row_number().over(w) - 1)
 
 
-def read_parquet_table(spark, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 def discover_header(
     raw: DataFrame,
     known_headers,

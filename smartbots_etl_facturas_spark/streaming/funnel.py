@@ -19,17 +19,12 @@ row past a watermark. Under that contract stream-final stages equal
 the batch funnel over the union (pinned in
 tests/test_streaming_funnel.py).
 
-``funnel_stateful_buffered`` relaxes that contract to the standard
-watermark discipline a real event pipeline needs: events may arrive
-out of order within a bounded ``horizon_us``. The state buffers each
-user's not-yet-final events and only FOLDS an event once the user's
-observed max event time has moved ``horizon_us`` past it (the
-per-user watermark), at which point no reordering within the horizon
-can precede it anymore — so the greedy walk sees events in true
-event-time order and stream-final stages equal the batch funnel over
-the union for ANY within-horizon shuffle (pinned in
-tests/test_streaming_funnel.py). Events older than the already-
-finalized frontier are dropped exactly like rows past a watermark.
+``funnel_stateful_buffered`` relaxes that contract to the watermark
+discipline of the buffered folds: events may arrive out of order
+within ``horizon_us``; an event folds only once no reordering within
+the horizon can precede it, so stream-final stages still equal the
+batch funnel over the union for ANY within-horizon shuffle (folding
+rule in its docstring; pinned in tests/test_streaming_buffered.py).
 Per-user state is (stage, bound, frontier) plus the buffer, whose
 size is bounded by the user's event volume inside one horizon — the
 same bound a watermarked window aggregation carries.
@@ -46,8 +41,48 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 
 from smartbots_etl_facturas_spark.streaming.timeseries import (
-    _reject_null_fold_input,
+    MIN_US,
+    _apply_with_state,
+    _arm_timeout,
+    _hold,
+    _read_rows,
+    _take_final,
+    _validate_horizon,
+    _validate_ttl,
 )
+
+
+def _funnel_plan(df, steps, user_col, extra_out=""):
+    """(step list, output schema) of a streaming funnel."""
+    steps = list(steps)
+    if not steps:
+        raise ValueError("funnel needs at least one step")
+    key_type = df.schema[user_col].dataType.simpleString()
+    out_schema = f"{user_col} {key_type}, stage long, bound_ts timestamp"
+    return steps, out_schema + extra_out
+
+
+def _greedy_walk(steps, stage, bound_us, events):
+    """Advance (stage, bound) over time-ordered (ts_us, type, ...) rows:
+    step i completes at the first ``steps[i]`` event strictly after
+    the step-(i-1) completion."""
+    for t, ty, *_ in events:
+        if stage < len(steps) and ty == steps[stage] and t > bound_us:
+            stage += 1
+            bound_us = t
+    return stage, bound_us
+
+
+def _stage_row(user_col, key, stage, bound_us, **extra):
+    import pandas as pd
+
+    bound_ts = pd.Timestamp(bound_us * 1000) if bound_us > MIN_US else pd.NaT
+    return pd.DataFrame({
+        user_col: [key[0]],
+        "stage": [int(stage)],
+        "bound_ts": [bound_ts],
+        **{name: [v] for name, v in extra.items()},
+    })
 
 
 def funnel_stateful(
@@ -69,69 +104,28 @@ def funnel_stateful(
     late-drop. Default None keeps the exact r9 behavior (no watermark,
     state lives forever; see streaming/timeseries.py:ewma_stateful for
     the shared TTL contract)."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from .timeseries import MIN_US, _arm_ttl, _validate_ttl
-
-    steps = list(steps)
-    if not steps:
-        raise ValueError("funnel needs at least one step")
+    steps, out_schema = _funnel_plan(df, steps, user_col)
     _validate_ttl(state_ttl_us)
-    key_type = df.schema[user_col].dataType.simpleString()
-    out_schema = f"{user_col} {key_type}, stage long, bound_ts timestamp"
-    state_schema = "stage long, bound_us long"
-    k = len(steps)
 
-    def fn(key, pdf_iter, state: GroupState):
-        import pandas as pd
-
+    def fn(key, pdf_iter, state):
         if state.hasTimedOut:
             # idle past the TTL: evict; a returning user starts over
             state.remove()
             return
 
-        rows = pd.concat(list(pdf_iter), ignore_index=True).sort_values(
-            [ts_col], kind="mergesort"
+        rows = _read_rows(pdf_iter, key, ts_col, type_col, None, False)
+        stage, bound_us = _greedy_walk(
+            steps, *(state.get if state.exists else (0, MIN_US)),
+            sorted(rows, key=lambda e: e[0]),
         )
-        _reject_null_fold_input(rows, key, ts_col, type_col, None)
-        ts_us = (rows[ts_col].astype("int64") // 1000).tolist()
-        types = rows[type_col].tolist()
-
-        stage, bound_us = (state.get if state.exists else (0, MIN_US))
-        for t, ty in zip(ts_us, types):
-            if stage < k and ty == steps[stage] and t > bound_us:
-                stage += 1
-                bound_us = t
         state.update((int(stage), int(bound_us)))
-        _arm_ttl(state, state_ttl_us, bound_us)
-        yield pd.DataFrame(
-            {
-                user_col: [key[0]],
-                "stage": [int(stage)],
-                "bound_ts": [
-                    pd.Timestamp(bound_us * 1000) if bound_us > MIN_US else pd.NaT
-                ],
-            }
-        )
+        if state_ttl_us is not None:
+            _arm_timeout(state, bound_us + state_ttl_us)
+        yield _stage_row(user_col, key, stage, bound_us)
 
-    src = df.filter(df[type_col].isin(steps))
-    if state_ttl_us is not None:
-        return (
-            src.withWatermark(ts_col, f"{state_ttl_us} microseconds")
-            .groupBy(user_col)
-            .applyInPandasWithState(
-                fn,
-                outputStructType=out_schema,
-                stateStructType=state_schema,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.EventTimeTimeout,
-            )
-        )
-    return src.groupBy(user_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _apply_with_state(
+        df.filter(df[type_col].isin(steps)), user_col, ts_col, fn,
+        out_schema, "stage long, bound_us long", "update", state_ttl_us,
     )
 
 
@@ -173,104 +167,35 @@ def funnel_stateful_buffered(
     ``n_buffered`` is the user's not-yet-final step events still held
     in state.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from .timeseries import MIN_US
-
-    steps = list(steps)
-    if not steps:
-        raise ValueError("funnel needs at least one step")
-    if horizon_us < 0:
-        raise ValueError("horizon_us must be >= 0")
-    if watermark_delay_us is None:
-        watermark_delay_us = horizon_us
-    if watermark_delay_us < horizon_us:
-        raise ValueError("watermark_delay_us must be >= horizon_us")
-    key_type = df.schema[user_col].dataType.simpleString()
-    out_schema = (
-        f"{user_col} {key_type}, stage long, bound_ts timestamp, "
-        "n_buffered long"
+    steps, out_schema = _funnel_plan(
+        df, steps, user_col, ", n_buffered long"
     )
+    delay_us = _validate_horizon(horizon_us, watermark_delay_us)
     state_schema = (
         "stage long, bound_us long, fin_us long, "
         "buf_ts array<long>, buf_ty array<string>"
     )
-    k = len(steps)
     step_set = set(steps)
 
-    def fn(key, pdf_iter, state: GroupState):
-        import pandas as pd
-
-        if state.exists:
-            st = state.get
-            stage, bound_us, fin_us = int(st[0]), int(st[1]), int(st[2])
-            buf = list(zip(list(st[3] or []), list(st[4] or [])))
-        else:
-            stage, bound_us, fin_us = 0, MIN_US, MIN_US
-            buf = []
-
-        if state.hasTimedOut:
-            # quiet-user flush: the global watermark passed (newest
-            # buffered event + horizon) — the whole buffer is final.
-            frontier = max([fin_us] + [e[0] for e in buf])
-        else:
-            rows = pd.concat(list(pdf_iter), ignore_index=True)
-            _reject_null_fold_input(rows, key, ts_col, type_col, None)
-            new_ts = (rows[ts_col].astype("int64") // 1000).tolist()
-            new_ty = rows[type_col].tolist()
-
-            # admit new rows: anything at-or-before the finalized
-            # frontier arrived later than the horizon allows and is
-            # dropped; only step-typed rows consume buffer space
-            # (others just advance the frontier via max_us below)
-            max_us = max([fin_us + horizon_us] + new_ts) if new_ts else (
-                fin_us + horizon_us
-            )
-            for t, ty in zip(new_ts, new_ty):
-                if t > fin_us and ty in step_set:
-                    buf.append((t, ty))
-            frontier = max(fin_us, max_us - horizon_us)
-
-        ready = sorted(
-            [e for e in buf if e[0] <= frontier]
-        )  # (ts, type) order == the batch twin's sort_array struct order
-        buf = [e for e in buf if e[0] > frontier]
-        for t, ty in ready:
-            if stage < k and ty == steps[stage] and t > bound_us:
-                stage += 1
-                bound_us = t
-
-        state.update((
-            int(stage), int(bound_us), int(frontier),
-            [int(t) for t, _ in buf], [ty for _, ty in buf],
-        ))
-        if buf:
-            # arm the quiet-user flush (ceil to ms, strictly above the
-            # current watermark)
-            timeout_ms = -(-(max(e[0] for e in buf) + horizon_us) // 1000)
-            state.setTimeoutTimestamp(
-                max(timeout_ms, state.getCurrentWatermarkMs() + 1)
-            )
-        yield pd.DataFrame(
-            {
-                user_col: [key[0]],
-                "stage": [int(stage)],
-                "bound_ts": [
-                    pd.Timestamp(bound_us * 1000) if bound_us > MIN_US else pd.NaT
-                ],
-                "n_buffered": [len(buf)],
-            }
+    def fn(key, pdf_iter, state):
+        # only step-typed rows consume buffer space (others just
+        # advance the frontier); (ts, type) order == the batch twin's
+        # sort_array struct order
+        head, frontier, ready, held = _take_final(
+            state, 2, 2,
+            lambda: _read_rows(pdf_iter, key, ts_col, type_col, None, False),
+            lambda e: e[1] in step_set, horizon_us, lambda e: e[:2],
+        )
+        stage, bound_us = _greedy_walk(
+            steps, *(head or (0, MIN_US)), ready
+        )
+        _hold(state, (int(stage), int(bound_us)), frontier, held, 2,
+              horizon_us)
+        yield _stage_row(
+            user_col, key, stage, bound_us, n_buffered=len(held)
         )
 
-    return (
-        df.withWatermark(
-            ts_col, f"{max(watermark_delay_us, 0)} microseconds"
-        )
-        .groupBy(user_col)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return _apply_with_state(
+        df, user_col, ts_col, fn, out_schema, state_schema, "update",
+        delay_us,
     )

@@ -1,20 +1,36 @@
-"""Streaming EWMA: the batch integer recurrence of
-operators/timeseries.py carried across micro-batches with
-``applyInPandasWithState`` — per-key state is one (accumulator,
-last-event-time) pair, so state size is O(distinct keys) and never
-grows with stream length (no timeout needed; the state IS the
-operator's meaning).
+"""Streaming ordered folds: the batch integer recurrences of
+operators/timeseries.py (EWMA, Holt, CUSUM) carried across
+micro-batches with ``applyInPandasWithState``. Each recurrence is
+defined once (``_ewma``/``_holt``/``_cusum``) and runs through two
+kernels, :func:`_strict_fold_stream` (``*_stateful``) and
+:func:`_buffered_fold_stream` (``*_stateful_buffered``). Strict
+per-key state is the recurrence state plus the last processed
+(ts, tie) position, so state size is O(distinct keys) and never grows
+with stream length (no timeout needed; the state IS the operator's
+meaning).
 
-Late-data policy: a row with event time strictly BEFORE the state's
-last processed time cannot be folded into the recurrence (EWMA is
-order-sequential) and is dropped — the same discard semantics a
-watermark gives an aggregation. Rows inside one micro-batch are
-processed in event-time order.
+Late-data policy (strict kernel): a row with event time strictly
+BEFORE the state's last processed time cannot be folded into the
+recurrence (the folds are order-sequential) and is dropped — the same
+discard semantics a watermark gives an aggregation. Rows inside one
+micro-batch are processed in event-time order.
 
 Determinism matches the batch twin exactly — integer units,
 truncating division toward zero, stable (ts, tie) ordering — PROVIDED
 ``tie_col`` is passed when one key can carry same-timestamp rows
 (see :func:`ewma_stateful`); tests pin stream == batch.
+
+Why two kernels remain: the buffered kernel at ``horizon_us=0`` does
+not reproduce the strict one.
+
+- It always adds a global watermark, while the strict default has
+  none, so a key that lags the others keeps rows under the strict
+  kernel that the buffered one drops before the fold.
+- Its timeout flushes the buffer, while the strict TTL evicts the
+  key and restarts the recurrence.
+- It drops a cross-batch row at the frontier's timestamp even when
+  that row's tie sorts after the last folded row; the strict cut
+  admits it.
 """
 
 from __future__ import annotations
@@ -50,23 +66,277 @@ def _validate_ttl(state_ttl_us) -> None:
         raise ValueError("state_ttl_us must be positive (or None)")
 
 
-def _arm_ttl(state, state_ttl_us, base_us: int) -> None:
-    """Arm the idle-key eviction timeout at (newest ACCEPTED event +
-    TTL), clamped strictly past the current watermark (Spark rejects
-    timeouts at or before it). Shared by the strict fold family.
+def _validate_horizon(horizon_us: int, watermark_delay_us) -> int:
+    """Check the buffered family's (horizon, global delay) pair and
+    return the delay (default: the horizon)."""
+    if horizon_us < 0:
+        raise ValueError("horizon_us must be >= 0")
+    if watermark_delay_us is None:
+        return horizon_us
+    if watermark_delay_us < horizon_us:
+        # a global delay tighter than the per-key horizon would drop
+        # rows the frontier still admits — never a sane configuration.
+        raise ValueError("watermark_delay_us must be >= horizon_us")
+    return watermark_delay_us
 
-    Round-11 (ADVICE): ``base_us`` is the fold's accepted-event bound
-    (``last_us``), NOT the batch max — a batch of only late/duplicate
-    rows must not refresh an idle key's TTL, or the documented
-    "idle = no accepted events" eviction contract silently weakens to
-    "no arrivals". A key that never accepted anything (base −1) or
-    whose accepted events are pre-1970 (base < 0) arms at the
-    watermark clamp instead of living forever."""
-    if state_ttl_us is None:
-        return
-    timeout_ms = -(-(base_us + state_ttl_us) // 1000)  # ceil to ms
+
+def _arm_timeout(state, at_us: int) -> None:
+    """Arm the event-time timeout at ``at_us`` (ceil to ms), clamped
+    strictly past the current watermark (Spark rejects timeouts at or
+    before it).
+
+    The strict family arms TTL eviction at (newest ACCEPTED event +
+    TTL). Round-11 (ADVICE): that base is the fold's accepted-event
+    bound (``last_us``), NOT the batch max — a batch of only
+    late/duplicate rows must not refresh an idle key's TTL, or the
+    documented "idle = no accepted events" eviction contract silently
+    weakens to "no arrivals". A key that never accepted anything or
+    whose accepted events are pre-1970 arms at the watermark clamp
+    instead of living forever. The buffered family arms its quiet-key
+    flush at (newest buffered event + horizon)."""
     state.setTimeoutTimestamp(
-        max(timeout_ms, state.getCurrentWatermarkMs() + 1)
+        max(-(-at_us // 1000), state.getCurrentWatermarkMs() + 1)
+    )
+
+
+def _apply_with_state(df, key_col, ts_col, fn, out_schema, state_schema,
+                      output_mode, delay_us):
+    """Group by key and run ``fn`` with state. ``delay_us`` None: no
+    watermark and no timeout; otherwise ``withWatermark(ts, delay)``
+    and an event-time timeout (TTL eviction or quiet-key flush)."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    timeout = GroupStateTimeout.NoTimeout
+    if delay_us is not None:
+        df = df.withWatermark(ts_col, f"{delay_us} microseconds")
+        timeout = GroupStateTimeout.EventTimeTimeout
+    return df.groupBy(key_col).applyInPandasWithState(
+        fn, out_schema, state_schema, output_mode, timeout
+    )
+
+
+def _read_rows(pdf_iter, key, ts_col, val_col, tie_col, numeric=True):
+    """Decode one group's input into (ts_us, value, tie) tuples in
+    arrival order; ``numeric`` casts the values to int64 units."""
+    import pandas as pd
+
+    rows = pd.concat(list(pdf_iter), ignore_index=True)
+    _reject_null_fold_input(rows, key, ts_col, val_col, tie_col)
+    vals = rows[val_col].astype("int64") if numeric else rows[val_col]
+    return list(zip(
+        (rows[ts_col].astype("int64") // 1000).tolist(),
+        vals.tolist(),
+        rows[tie_col].tolist() if tie_col else [None] * len(rows),
+    ))
+
+
+def _take_final(state, n, width, read, admit, horizon_us, order):
+    """The buffered step shared by the folds and the funnel: unpack
+    the state's (``n`` head fields, frontier, buffer of ``width``-field
+    rows), admit the new rows from ``read()``, advance the frontier
+    and return (head or None, frontier, final rows sorted by
+    ``order``, rows still held).
+
+    Rows at or before the finalized frontier arrived later than the
+    horizon allows and are dropped; ``admit`` (None: all) picks the
+    rows worth buffering, but every arrival advances the frontier to
+    (newest arrival - horizon). On the quiet-key timeout there is no
+    input and the whole buffer is final."""
+    if state.exists:
+        st = state.get
+        head, fin_us = tuple(st[:n]), int(st[n])
+        buf = list(zip(*(st[n + 1 + i] or [] for i in range(width))))
+    else:
+        head, fin_us, buf = None, MIN_US, []
+    if state.hasTimedOut:
+        frontier = max([fin_us] + [e[0] for e in buf])
+    else:
+        new = read()
+        buf += [
+            e for e in new if e[0] > fin_us and (admit is None or admit(e))
+        ]
+        frontier = max([fin_us] + [e[0] - horizon_us for e in new])
+    ready = sorted((e for e in buf if e[0] <= frontier), key=order)
+    return head, frontier, ready, [e for e in buf if e[0] > frontier]
+
+
+def _hold(state, head, frontier, held, width, horizon_us):
+    """Write a buffered key's state back and arm its quiet-key flush:
+    fire once the global watermark passes the newest held row +
+    horizon."""
+    state.update(
+        (*head, frontier, *([e[i] for e in held] for i in range(width)))
+    )
+    if held:
+        _arm_timeout(state, max(e[0] for e in held) + horizon_us)
+
+
+def _trunc_div(n: int, d: int) -> int:
+    q = abs(n) // d
+    return q if n >= 0 else -q
+
+
+def _ewma(alpha_denom: int):
+    """EWMA, α = 1/alpha_denom: acc += trunc((x - acc) / alpha_denom)."""
+    if alpha_denom < 2:
+        raise ValueError("alpha_denom must be >= 2")
+
+    def fold_one(st, x):
+        acc = x if st is None else st[0] + _trunc_div(x - st[0], alpha_denom)
+        return (acc,), (acc,)
+
+    return "acc long", ("ewma_units",), fold_one
+
+
+def _holt(alpha_denom: int, beta_denom: int):
+    """Holt's coupled (level, trend) recurrences; emits level, trend
+    and the one-step forecast level + trend."""
+    if alpha_denom < 2 or beta_denom < 2:
+        raise ValueError("alpha_denom and beta_denom must be >= 2")
+
+    def fold_one(st, x):
+        if st is None:
+            return (x, 0), (x, 0, x)
+        level, trend = st
+        pred = level + trend
+        new_level = pred + _trunc_div(x - pred, alpha_denom)
+        trend = trend + _trunc_div(new_level - pred, beta_denom)
+        return (new_level, trend), (new_level, trend, new_level + trend)
+
+    return (
+        "lvl long, trd long",
+        ("level_units", "trend_units", "forecast_units"),
+        fold_one,
+    )
+
+
+def _cusum(target_units: int, slack_units: int):
+    """One-sided CUSUM: s = max(0, s + (x - target - slack)), s0 = 0."""
+    drift = int(target_units + slack_units)
+
+    def fold_one(st, x):
+        s = max(0, (0 if st is None else st[0]) + x - drift)
+        return (s,), (s,)
+
+    return "s long", ("cusum_units",), fold_one
+
+
+class _Fold:
+    """What both fold kernels share for one recurrence over one
+    stream's columns: the schemas, the stable (ts, tie) order, the
+    fold loop and the emit.
+
+    ``rec`` is a recurrence ``(state_schema, out_names, fold_one)``:
+    ``fold_one(state_tuple_or_None, x) -> (state_tuple, out_tuple)``
+    in pure integer arithmetic, so the fold is bit-identical to the
+    batch twin; ``state_schema`` names the state tuple's long fields
+    and ``out_names`` the output tuple's."""
+
+    def __init__(self, df, key_col, ts_col, units_col, tie_col, rec):
+        self.key_col, self.ts_col, self.units_col = key_col, ts_col, units_col
+        self.tie_col = tie_col
+        self.fold_schema, self.out_names, self.fold_one = rec
+        self.n = self.fold_schema.count(",") + 1
+        key_type = df.schema[key_col].dataType.simpleString()
+        self.out_schema = (
+            f"{key_col} {key_type}, {ts_col} timestamp, {units_col} long, "
+            + ", ".join(f"{name} long" for name in self.out_names)
+        )
+        self.tie_type = (
+            df.schema[tie_col].dataType.simpleString() if tie_col else None
+        )
+
+    def state_schema(self, tail: str, tie_field: str) -> str:
+        """The recurrence's fields, the kernel's ``tail`` fields and,
+        with a tie column, ``tie_field`` formatted with its type."""
+        tie = f", {tie_field.format(self.tie_type)}" if self.tie_col else ""
+        return f"{self.fold_schema}, {tail}{tie}"
+
+    def order(self, e):
+        """Sort key of a (ts_us, x, tie) row: (ts, tie), or ts alone —
+        used with the stable ``sorted``, so ties keep a fixed order."""
+        return (e[0], e[2]) if self.tie_col else e[0]
+
+    def fold_emit(self, fold_st, rows, key):
+        """Fold ``rows`` (already in order) into ``fold_st``; returns
+        the new state and the emitted frame — one row per folded input
+        row, None when nothing folded."""
+        import pandas as pd
+
+        out = []
+        for t, x, *_ in rows:
+            fold_st, vals = self.fold_one(fold_st, x)
+            out.append((key[0], pd.Timestamp(t, unit="us"), x, *vals))
+        if not out:
+            return fold_st, None
+        return fold_st, pd.DataFrame(out, columns=[
+            self.key_col, self.ts_col, self.units_col, *self.out_names
+        ])
+
+
+def _strict_fold_stream(
+    df: DataFrame,
+    key_col: str,
+    ts_col: str,
+    units_col: str,
+    tie_col: str | None,
+    state_ttl_us: int | None,
+    rec: tuple,
+):
+    """The strict ordered-fold kernel: in-batch rows fold in stable
+    (ts, tie) order; rows at or before the state's last processed
+    (ts, tie) position are dropped; ``state_ttl_us`` evicts idle keys
+    (see :func:`ewma_stateful` for the contract)."""
+    _validate_ttl(state_ttl_us)
+    io = _Fold(df, key_col, ts_col, units_col, tie_col, rec)
+    # the state carries the last processed (ts, tie) so a LATER
+    # micro-batch can be cut at exactly the batch twin's sort position
+    # — without the tie a cross-batch equal-ts arrival would fold
+    # after already-processed equal-ts rows, where the batch sort
+    # would have placed it before/among them.
+    state_schema = io.state_schema("last_us long", "last_tie {}")
+
+    def fn(key, pdf_iter, state):
+        if state.hasTimedOut:
+            # idle past the TTL: evict; a re-arrival restarts fresh
+            state.remove()
+            return
+
+        rows = sorted(
+            _read_rows(pdf_iter, key, ts_col, units_col, tie_col), key=io.order
+        )
+        if state.exists:
+            st = state.get
+            fold_st = tuple(int(v) for v in st[:io.n])
+            bound_us = int(st[io.n])
+            bound_tie = st[io.n + 1] if tie_col else None
+        else:
+            fold_st, bound_us, bound_tie = None, MIN_US, None
+
+        # cross-batch boundary: any row at-or-before the state's last
+        # processed (ts, tie) in batch-sort order would have folded
+        # EARLIER in the batch twin — folding it now would diverge, so
+        # it is dropped like any other late row. Without a tie column,
+        # equal-ts rows arriving in a later micro-batch are dropped too
+        # (module-doc contract: pass tie_col when equal-ts rows can
+        # span batches).
+        rows = [
+            e for e in rows
+            if e[0] > bound_us
+            or (e[0] == bound_us and tie_col and e[2] > bound_tie)
+        ]
+        last = (rows[-1][0], rows[-1][2]) if rows else (bound_us, bound_tie)
+        fold_st, out = io.fold_emit(fold_st, rows, key)
+        if fold_st is not None:
+            state.update((*fold_st, *last) if tie_col else (*fold_st, last[0]))
+            if state_ttl_us is not None:
+                _arm_timeout(state, last[0] + state_ttl_us)
+        if out is not None:
+            yield out
+
+    return _apply_with_state(
+        df, key_col, ts_col, fn, io.out_schema, state_schema, "append",
+        state_ttl_us,
     )
 
 
@@ -101,101 +371,9 @@ def ewma_stateful(
     global max event time are dropped before the fold (the lateness
     bound any TTL implies). Default None keeps the exact r9 behavior:
     no watermark, no eviction."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    if alpha_denom < 2:
-        raise ValueError("alpha_denom must be >= 2")
-    _validate_ttl(state_ttl_us)
-    key_type = df.schema[key_col].dataType.simpleString()
-    out_schema = (
-        f"{key_col} {key_type}, {ts_col} timestamp, "
-        f"{units_col} long, ewma_units long"
-    )
-    # the state carries the last processed (ts, tie) so a LATER
-    # micro-batch can be cut at exactly the batch twin's sort position
-    # — without the tie a cross-batch equal-ts arrival would fold
-    # after already-processed equal-ts rows, where the batch sort
-    # would have placed it before/among them.
-    if tie_col:
-        tie_type = df.schema[tie_col].dataType.simpleString()
-        state_schema = f"acc long, last_us long, last_tie {tie_type}"
-    else:
-        state_schema = "acc long, last_us long"
-
-    sort_cols = [ts_col] + ([tie_col] if tie_col else [])
-
-    def fn(key, pdf_iter, state: GroupState):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            # idle past the TTL: evict; a re-arrival restarts fresh
-            state.remove()
-            return
-
-        rows = pd.concat(list(pdf_iter), ignore_index=True).sort_values(
-            sort_cols, kind="mergesort"   # stable: ties keep a fixed order
-        )
-        _reject_null_fold_input(rows, key, ts_col, units_col, tie_col)
-        ts_us = (rows[ts_col].astype("int64") // 1000).tolist()
-        xs = rows[units_col].astype("int64").tolist()
-        ties = rows[tie_col].tolist() if tie_col else None
-
-        if state.exists:
-            st = state.get
-            acc, bound_us = st[0], st[1]
-            bound_tie = st[2] if tie_col else None
-        else:
-            acc, bound_us, bound_tie = None, MIN_US, None
-
-        last_us, last_tie = bound_us, bound_tie
-        out_t, out_x, out_s = [], [], []
-        for i, (t, x) in enumerate(zip(ts_us, xs)):
-            # cross-batch boundary: any row at-or-before the state's
-            # last processed (ts, tie) in batch-sort order would have
-            # folded EARLIER in the batch twin — folding it now would
-            # diverge, so it is dropped like any other late row.
-            # Without a tie column, equal-ts rows arriving in a later
-            # micro-batch are dropped too (module-doc contract: pass
-            # tie_col when equal-ts rows can span batches).
-            if t < bound_us:
-                continue
-            if t == bound_us and (ties is None or ties[i] <= bound_tie):
-                continue
-            if acc is None:
-                acc = int(x)
-            else:
-                d = int(x) - acc
-                q = abs(d) // alpha_denom     # truncation toward zero
-                acc = acc + (q if d >= 0 else -q)
-            last_us = t
-            last_tie = ties[i] if ties is not None else None
-            out_t.append(t)
-            out_x.append(x)
-            out_s.append(acc)
-        if acc is not None:
-            state.update(
-                (acc, last_us, last_tie) if tie_col else (acc, last_us)
-            )
-            _arm_ttl(state, state_ttl_us, last_us)
-        if out_t:
-            yield pd.DataFrame({
-                key_col: [key[0]] * len(out_t),
-                ts_col: [pd.Timestamp(t, unit="us") for t in out_t],
-                units_col: out_x,
-                "ewma_units": out_s,
-            })
-
-    if state_ttl_us is not None:
-        return (
-            df.withWatermark(ts_col, f"{state_ttl_us} microseconds")
-            .groupBy(key_col)
-            .applyInPandasWithState(
-                fn, out_schema, state_schema, "append",
-                GroupStateTimeout.EventTimeTimeout,
-            )
-        )
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return _strict_fold_stream(
+        df, key_col, ts_col, units_col, tie_col, state_ttl_us,
+        _ewma(alpha_denom),
     )
 
 
@@ -221,386 +399,9 @@ def holt_stateful(
     idle keys (see :func:`ewma_stateful` — same opt-in TTL contract:
     eviction is a semantic reset and adds a watermark).
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    if alpha_denom < 2 or beta_denom < 2:
-        raise ValueError("alpha_denom and beta_denom must be >= 2")
-    _validate_ttl(state_ttl_us)
-    key_type = df.schema[key_col].dataType.simpleString()
-    out_schema = (
-        f"{key_col} {key_type}, {ts_col} timestamp, {units_col} long, "
-        "level_units long, trend_units long, forecast_units long"
-    )
-    if tie_col:
-        tie_type = df.schema[tie_col].dataType.simpleString()
-        state_schema = (
-            f"lvl long, trd long, last_us long, last_tie {tie_type}"
-        )
-    else:
-        state_schema = "lvl long, trd long, last_us long"
-    sort_cols = [ts_col] + ([tie_col] if tie_col else [])
-
-    def _trunc_div(n: int, d: int) -> int:
-        q = abs(n) // d
-        return q if n >= 0 else -q
-
-    def fn(key, pdf_iter, state: GroupState):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            # idle past the TTL: evict; a re-arrival restarts fresh
-            state.remove()
-            return
-
-        rows = pd.concat(list(pdf_iter), ignore_index=True).sort_values(
-            sort_cols, kind="mergesort"
-        )
-        _reject_null_fold_input(rows, key, ts_col, units_col, tie_col)
-        ts_us = (rows[ts_col].astype("int64") // 1000).tolist()
-        xs = rows[units_col].astype("int64").tolist()
-        ties = rows[tie_col].tolist() if tie_col else None
-
-        if state.exists:
-            st = state.get
-            level = None if st[0] is None else int(st[0])
-            trend, bound_us = int(st[1]), int(st[2])
-            bound_tie = st[3] if tie_col else None
-        else:
-            level, trend, bound_us, bound_tie = None, 0, MIN_US, None
-
-        last_us, last_tie = bound_us, bound_tie
-        out_t, out_x, out_l, out_b = [], [], [], []
-        for i, (t, x) in enumerate(zip(ts_us, xs)):
-            if t < bound_us:
-                continue
-            if t == bound_us and (ties is None or ties[i] <= bound_tie):
-                continue
-            if level is None:
-                level, trend = int(x), 0
-            else:
-                pred = level + trend
-                new_level = pred + _trunc_div(int(x) - pred, alpha_denom)
-                trend = trend + _trunc_div(new_level - pred, beta_denom)
-                level = new_level
-            last_us = t
-            last_tie = ties[i] if ties is not None else None
-            out_t.append(t)
-            out_x.append(x)
-            out_l.append(level)
-            out_b.append(trend)
-        if level is not None:
-            state.update(
-                (level, trend, last_us, last_tie) if tie_col
-                else (level, trend, last_us)
-            )
-            _arm_ttl(state, state_ttl_us, last_us)
-        if out_t:
-            yield pd.DataFrame({
-                key_col: [key[0]] * len(out_t),
-                ts_col: [pd.Timestamp(t, unit="us") for t in out_t],
-                units_col: out_x,
-                "level_units": out_l,
-                "trend_units": out_b,
-                "forecast_units": [a + b for a, b in zip(out_l, out_b)],
-            })
-
-    if state_ttl_us is not None:
-        return (
-            df.withWatermark(ts_col, f"{state_ttl_us} microseconds")
-            .groupBy(key_col)
-            .applyInPandasWithState(
-                fn, out_schema, state_schema, "append",
-                GroupStateTimeout.EventTimeTimeout,
-            )
-        )
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-def _buffered_fold_stream(
-    df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    units_col: str,
-    tie_col: str | None,
-    horizon_us: int,
-    state_extra_schema: str,
-    n_state: int,
-    fold_one,
-    out_extra_schema: str,
-    out_extra_names: list[str],
-    watermark_delay_us: int | None = None,
-):
-    """Shared machinery for the watermark-buffered ordered-fold
-    family (EWMA / Holt / CUSUM buffered variants).
-
-    Contract (the buffered-funnel discipline,
-    streaming/funnel.py:funnel_stateful_buffered): a row is FINAL —
-    and only then folded into the recurrence and emitted, in
-    (ts, tie) order — once the key's max observed event time is at
-    least ``horizon_us`` past it; until then it waits in state. Rows
-    at or before the already-finalized frontier are dropped (late
-    beyond the horizon). Per-key state = ``n_state`` fold fields
-    (None until the first fold) + frontier + the within-horizon
-    buffer — bounded by one horizon's event volume per key, the
-    watermarked-aggregation bound. Stream-final output equals the
-    batch twin over the union for any within-horizon shuffle,
-    PROVIDED each row also clears the stream's GLOBAL watermark
-    (delay = ``watermark_delay_us``, default ``horizon_us``): a row
-    more than that delay behind the global max event time is dropped
-    by Spark before it reaches the fold, even when its own key's
-    frontier would still admit it. A key that lags other keys by more
-    than the delay therefore sees rows its batch twin would fold —
-    raise ``watermark_delay_us`` above ``horizon_us`` to give slow
-    keys cross-key slack without widening the per-key reorder window
-    (the only cost is a later quiet-key flush).
-
-    QUIET-KEY FLUSH (round-9): the per-key frontier only advances on
-    that key's own arrivals, so under ``NoTimeout`` a key that goes
-    silent would hold its within-horizon tail forever and never emit
-    it. The fold therefore runs under an EVENT-TIME timeout: the
-    stream carries a ``withWatermark(ts, watermark_delay)`` and each
-    update arms a timeout at (newest buffered event + horizon); when
-    the GLOBAL watermark passes it, the state function fires with no
-    input and folds/emits the whole buffer in order. Safe because
-    any row that could still arrive is at or above the watermark,
-    i.e. newer than everything flushed.
-
-    ``fold_one(state_tuple_or_None, x) -> (state_tuple, out_tuple)``
-    defines the recurrence; it must be pure integer arithmetic so the
-    fold is bit-identical to the batch twin.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    if horizon_us < 0:
-        raise ValueError("horizon_us must be >= 0")
-    if watermark_delay_us is None:
-        watermark_delay_us = horizon_us
-    if watermark_delay_us < horizon_us:
-        # a global delay tighter than the per-key horizon would drop
-        # rows the frontier still admits — never a sane configuration.
-        raise ValueError("watermark_delay_us must be >= horizon_us")
-    key_type = df.schema[key_col].dataType.simpleString()
-    out_schema = (
-        f"{key_col} {key_type}, {ts_col} timestamp, "
-        f"{units_col} long, {out_extra_schema}"
-    )
-    state_schema = (
-        f"{state_extra_schema}, fin_us long, "
-        "buf_ts array<long>, buf_x array<long>"
-    )
-    if tie_col:
-        tie_type = df.schema[tie_col].dataType.simpleString()
-        state_schema += f", buf_tie array<{tie_type}>"
-
-    def fn(key, pdf_iter, state: GroupState):
-        import pandas as pd
-
-        if state.exists:
-            st = state.get
-            fold_st = (
-                None if st[0] is None
-                else tuple(int(v) for v in st[:n_state])
-            )
-            fin_us = int(st[n_state])
-            b_ts = list(st[n_state + 1] or [])
-            b_x = list(st[n_state + 2] or [])
-            b_tie = (
-                list(st[n_state + 3] or []) if tie_col
-                else [None] * len(b_ts)
-            )
-            buf = list(zip(b_ts, b_x, b_tie))
-        else:
-            fold_st, fin_us, buf = None, -(1 << 62), []
-
-        if state.hasTimedOut:
-            # quiet-key flush: the global watermark passed (newest
-            # buffered event + horizon) — everything buffered is
-            # final; fold and emit the whole tail in order.
-            frontier = max([fin_us] + [e[0] for e in buf])
-        else:
-            rows = pd.concat(list(pdf_iter), ignore_index=True)
-            _reject_null_fold_input(rows, key, ts_col, units_col, tie_col)
-            new_ts = (rows[ts_col].astype("int64") // 1000).tolist()
-            new_x = rows[units_col].astype("int64").tolist()
-            new_tie = (
-                rows[tie_col].tolist() if tie_col else [None] * len(new_ts)
-            )
-            max_us = max([fin_us + horizon_us] + new_ts) if new_ts else (
-                fin_us + horizon_us
-            )
-            for t, x, tie in zip(new_ts, new_x, new_tie):
-                if t > fin_us:
-                    buf.append((t, x, tie))
-            frontier = max(fin_us, max_us - horizon_us)
-
-        if tie_col:
-            ready = sorted(
-                (e for e in buf if e[0] <= frontier),
-                key=lambda e: (e[0], e[2]),
-            )
-        else:
-            # no tie column: equal-ts rows fold in buffer (arrival)
-            # order under a stable sort — same caveat as the strict
-            # variants' module-doc contract
-            ready = sorted(
-                (e for e in buf if e[0] <= frontier), key=lambda e: e[0]
-            )
-        buf = [e for e in buf if e[0] > frontier]
-
-        out_t, out_x, out_extra = [], [], []
-        for t, x, _tie in ready:
-            fold_st, out_vals = fold_one(fold_st, int(x))
-            out_t.append(t)
-            out_x.append(x)
-            out_extra.append(out_vals)
-
-        buf_cols = (
-            [int(t) for t, _, _ in buf],
-            [int(x) for _, x, _ in buf],
-        )
-        if tie_col:
-            buf_cols = buf_cols + ([tie for _, _, tie in buf],)
-        packed = (
-            (None,) * n_state if fold_st is None
-            else tuple(int(v) for v in fold_st)
-        )
-        state.update((*packed, int(frontier), *buf_cols))
-        if buf:
-            # arm the quiet-key flush: fire once the global watermark
-            # passes the newest buffered event + horizon (ceil to ms;
-            # must stay strictly above the current watermark).
-            timeout_ms = -(-(max(e[0] for e in buf) + horizon_us) // 1000)
-            state.setTimeoutTimestamp(
-                max(timeout_ms, state.getCurrentWatermarkMs() + 1)
-            )
-        if out_t:
-            data = {
-                key_col: [key[0]] * len(out_t),
-                ts_col: [pd.Timestamp(t, unit="us") for t in out_t],
-                units_col: out_x,
-            }
-            for i, name in enumerate(out_extra_names):
-                data[name] = [vals[i] for vals in out_extra]
-            yield pd.DataFrame(data)
-
-    delay_interval = f"{max(watermark_delay_us, 0)} microseconds"
-    return (
-        df.withWatermark(ts_col, delay_interval)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def ewma_stateful_buffered(
-    df: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    units_col: str = "x_units",
-    alpha_denom: int = 4,
-    tie_col: str | None = None,
-    horizon_us: int = 600_000_000,
-    watermark_delay_us: int | None = None,
-):
-    """Watermark-buffered streaming EWMA — :func:`ewma_stateful`'s
-    recurrence under the buffered ordered-fold contract (see
-    :func:`_buffered_fold_stream`): out-of-order delivery within
-    ``horizon_us`` reproduces the batch EWMA exactly (pinned in
-    tests/test_streaming_buffered.py); rows beyond the horizon drop
-    with watermark semantics."""
-    if alpha_denom < 2:
-        raise ValueError("alpha_denom must be >= 2")
-
-    def fold(st, x):
-        if st is None:
-            return (x,), (x,)
-        acc = st[0]
-        d = x - acc
-        q = abs(d) // alpha_denom  # truncation toward zero
-        acc = acc + (q if d >= 0 else -q)
-        return (acc,), (acc,)
-
-    return _buffered_fold_stream(
-        df, key_col, ts_col, units_col, tie_col, horizon_us,
-        watermark_delay_us=watermark_delay_us,
-        state_extra_schema="acc long", n_state=1, fold_one=fold,
-        out_extra_schema="ewma_units long", out_extra_names=["ewma_units"],
-    )
-
-
-def holt_stateful_buffered(
-    df: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    units_col: str = "x_units",
-    alpha_denom: int = 4,
-    beta_denom: int = 8,
-    tie_col: str | None = None,
-    horizon_us: int = 600_000_000,
-    watermark_delay_us: int | None = None,
-):
-    """Watermark-buffered streaming Holt — :func:`holt_stateful`'s
-    coupled (level, trend) recurrences under the buffered
-    ordered-fold contract: within-horizon shuffle reproduces the
-    batch ``holt_linear`` exactly."""
-    if alpha_denom < 2 or beta_denom < 2:
-        raise ValueError("alpha_denom and beta_denom must be >= 2")
-
-    def _trunc_div(n, d):
-        q = abs(n) // d
-        return q if n >= 0 else -q
-
-    def fold(st, x):
-        if st is None:
-            return (x, 0), (x, 0, x)
-        level, trend = st
-        pred = level + trend
-        new_level = pred + _trunc_div(x - pred, alpha_denom)
-        trend = trend + _trunc_div(new_level - pred, beta_denom)
-        return (new_level, trend), (new_level, trend, new_level + trend)
-
-    return _buffered_fold_stream(
-        df, key_col, ts_col, units_col, tie_col, horizon_us,
-        watermark_delay_us=watermark_delay_us,
-        state_extra_schema="lvl long, trd long", n_state=2, fold_one=fold,
-        out_extra_schema=(
-            "level_units long, trend_units long, forecast_units long"
-        ),
-        out_extra_names=["level_units", "trend_units", "forecast_units"],
-    )
-
-
-def cusum_stateful_buffered(
-    df: DataFrame,
-    target_units: int,
-    slack_units: int = 0,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    units_col: str = "x_units",
-    tie_col: str | None = None,
-    horizon_us: int = 600_000_000,
-    watermark_delay_us: int | None = None,
-):
-    """Watermark-buffered streaming CUSUM — :func:`cusum_stateful`'s
-    drift recurrence ``s = max(0, s + (x - target - slack))`` under
-    the buffered ordered-fold contract: within-horizon shuffle
-    reproduces the batch ``cusum`` exactly."""
-    drift = int(target_units + slack_units)
-
-    def fold(st, x):
-        s = 0 if st is None else st[0]
-        s = max(0, s + x - drift)
-        return (s,), (s,)
-
-    return _buffered_fold_stream(
-        df, key_col, ts_col, units_col, tie_col, horizon_us,
-        watermark_delay_us=watermark_delay_us,
-        state_extra_schema="s long", n_state=1, fold_one=fold,
-        out_extra_schema="cusum_units long", out_extra_names=["cusum_units"],
+    return _strict_fold_stream(
+        df, key_col, ts_col, units_col, tie_col, state_ttl_us,
+        _holt(alpha_denom, beta_denom),
     )
 
 
@@ -629,77 +430,146 @@ def cusum_stateful(
     processed position are dropped. ``state_ttl_us`` evicts idle
     keys (see :func:`ewma_stateful` — same opt-in TTL contract).
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    _validate_ttl(state_ttl_us)
-    key_type = df.schema[key_col].dataType.simpleString()
-    out_schema = (
-        f"{key_col} {key_type}, {ts_col} timestamp, "
-        f"{units_col} long, cusum_units long"
+    return _strict_fold_stream(
+        df, key_col, ts_col, units_col, tie_col, state_ttl_us,
+        _cusum(target_units, slack_units),
     )
-    if tie_col:
-        tie_type = df.schema[tie_col].dataType.simpleString()
-        state_schema = f"s long, last_us long, last_tie {tie_type}"
-    else:
-        state_schema = "s long, last_us long"
-    sort_cols = [ts_col] + ([tie_col] if tie_col else [])
-    drift = int(target_units + slack_units)
 
-    def fn(key, pdf_iter, state: GroupState):
-        import pandas as pd
 
-        if state.hasTimedOut:
-            # idle past the TTL: evict; a re-arrival restarts fresh
-            state.remove()
-            return
+def _buffered_fold_stream(
+    df: DataFrame,
+    key_col: str,
+    ts_col: str,
+    units_col: str,
+    tie_col: str | None,
+    horizon_us: int,
+    watermark_delay_us: int | None,
+    rec: tuple,
+):
+    """The watermark-buffered ordered-fold kernel (EWMA / Holt / CUSUM
+    buffered variants).
 
-        rows = pd.concat(list(pdf_iter), ignore_index=True).sort_values(
-            sort_cols, kind="mergesort"
+    Contract (the buffered-funnel discipline,
+    streaming/funnel.py:funnel_stateful_buffered): a row is FINAL —
+    and only then folded into the recurrence and emitted, in
+    (ts, tie) order — once the key's max observed event time is at
+    least ``horizon_us`` past it; until then it waits in state. Rows
+    at or before the already-finalized frontier are dropped (late
+    beyond the horizon). Per-key state = the recurrence's fold fields
+    (None until the first fold) + frontier + the within-horizon
+    buffer — bounded by one horizon's event volume per key, the
+    watermarked-aggregation bound. Stream-final output equals the
+    batch twin over the union for any within-horizon shuffle,
+    PROVIDED each row also clears the stream's GLOBAL watermark
+    (delay = ``watermark_delay_us``, default ``horizon_us``): a row
+    more than that delay behind the global max event time is dropped
+    by Spark before it reaches the fold, even when its own key's
+    frontier would still admit it. A key that lags other keys by more
+    than the delay therefore sees rows its batch twin would fold —
+    raise ``watermark_delay_us`` above ``horizon_us`` to give slow
+    keys cross-key slack without widening the per-key reorder window
+    (the only cost is a later quiet-key flush).
+
+    QUIET-KEY FLUSH (round-9): the per-key frontier only advances on
+    that key's own arrivals, so under ``NoTimeout`` a key that goes
+    silent would hold its within-horizon tail forever and never emit
+    it. The fold therefore runs under an EVENT-TIME timeout: the
+    stream carries a ``withWatermark(ts, watermark_delay)`` and each
+    update arms a timeout at (newest buffered event + horizon); when
+    the GLOBAL watermark passes it, the state function fires with no
+    input and folds/emits the whole buffer in order. Safe because
+    any row that could still arrive is at or above the watermark,
+    i.e. newer than everything flushed.
+    """
+    delay_us = _validate_horizon(horizon_us, watermark_delay_us)
+    io = _Fold(df, key_col, ts_col, units_col, tie_col, rec)
+    width = 3 if tie_col else 2  # buffered (ts, x[, tie]) rows
+    state_schema = io.state_schema(
+        "fin_us long, buf_ts array<long>, buf_x array<long>",
+        "buf_tie array<{}>",
+    )
+
+    def fn(key, pdf_iter, state):
+        # no tie column: equal-ts rows fold in buffer (arrival) order
+        # under a stable sort — same caveat as the strict kernel's
+        head, frontier, ready, held = _take_final(
+            state, io.n, width,
+            lambda: _read_rows(pdf_iter, key, ts_col, units_col, tie_col),
+            None, horizon_us, io.order,
         )
-        _reject_null_fold_input(rows, key, ts_col, units_col, tie_col)
-        ts_us = (rows[ts_col].astype("int64") // 1000).tolist()
-        xs = rows[units_col].astype("int64").tolist()
-        ties = rows[tie_col].tolist() if tie_col else None
+        # the fold fields are None until the first row folds
+        fold_st = head if head and head[0] is not None else None
+        fold_st, out = io.fold_emit(fold_st, ready, key)
+        _hold(state, fold_st or (None,) * io.n, frontier, held, width,
+              horizon_us)
+        if out is not None:
+            yield out
 
-        if state.exists:
-            st = state.get
-            s, bound_us = st[0], st[1]
-            bound_tie = st[2] if tie_col else None
-        else:
-            s, bound_us, bound_tie = 0, MIN_US, None
+    return _apply_with_state(
+        df, key_col, ts_col, fn, io.out_schema, state_schema, "append",
+        delay_us,
+    )
 
-        last_us, last_tie = bound_us, bound_tie
-        out_t, out_x, out_s = [], [], []
-        for i, (t, x) in enumerate(zip(ts_us, xs)):
-            if t < bound_us:
-                continue
-            if t == bound_us and (ties is None or ties[i] <= bound_tie):
-                continue
-            s = max(0, s + int(x) - drift)
-            last_us = t
-            last_tie = ties[i] if ties is not None else None
-            out_t.append(t)
-            out_x.append(x)
-            out_s.append(s)
-        state.update((s, last_us, last_tie) if tie_col else (s, last_us))
-        _arm_ttl(state, state_ttl_us, last_us)
-        if out_t:
-            yield pd.DataFrame({
-                key_col: [key[0]] * len(out_t),
-                ts_col: [pd.Timestamp(t, unit="us") for t in out_t],
-                units_col: out_x,
-                "cusum_units": out_s,
-            })
 
-    if state_ttl_us is not None:
-        return (
-            df.withWatermark(ts_col, f"{state_ttl_us} microseconds")
-            .groupBy(key_col)
-            .applyInPandasWithState(
-                fn, out_schema, state_schema, "append",
-                GroupStateTimeout.EventTimeTimeout,
-            )
-        )
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+def ewma_stateful_buffered(
+    df: DataFrame,
+    key_col: str = "user_id",
+    ts_col: str = "ts",
+    units_col: str = "x_units",
+    alpha_denom: int = 4,
+    tie_col: str | None = None,
+    horizon_us: int = 600_000_000,
+    watermark_delay_us: int | None = None,
+):
+    """Watermark-buffered streaming EWMA — :func:`ewma_stateful`'s
+    recurrence under the buffered ordered-fold contract (see
+    :func:`_buffered_fold_stream`): out-of-order delivery within
+    ``horizon_us`` reproduces the batch EWMA exactly (pinned in
+    tests/test_streaming_buffered.py); rows beyond the horizon drop
+    with watermark semantics."""
+    return _buffered_fold_stream(
+        df, key_col, ts_col, units_col, tie_col, horizon_us,
+        watermark_delay_us, _ewma(alpha_denom),
+    )
+
+
+def holt_stateful_buffered(
+    df: DataFrame,
+    key_col: str = "user_id",
+    ts_col: str = "ts",
+    units_col: str = "x_units",
+    alpha_denom: int = 4,
+    beta_denom: int = 8,
+    tie_col: str | None = None,
+    horizon_us: int = 600_000_000,
+    watermark_delay_us: int | None = None,
+):
+    """Watermark-buffered streaming Holt — :func:`holt_stateful`'s
+    coupled (level, trend) recurrences under the buffered
+    ordered-fold contract: within-horizon shuffle reproduces the
+    batch ``holt_linear`` exactly."""
+    return _buffered_fold_stream(
+        df, key_col, ts_col, units_col, tie_col, horizon_us,
+        watermark_delay_us, _holt(alpha_denom, beta_denom),
+    )
+
+
+def cusum_stateful_buffered(
+    df: DataFrame,
+    target_units: int,
+    slack_units: int = 0,
+    key_col: str = "user_id",
+    ts_col: str = "ts",
+    units_col: str = "x_units",
+    tie_col: str | None = None,
+    horizon_us: int = 600_000_000,
+    watermark_delay_us: int | None = None,
+):
+    """Watermark-buffered streaming CUSUM — :func:`cusum_stateful`'s
+    drift recurrence ``s = max(0, s + (x - target - slack))`` under
+    the buffered ordered-fold contract: within-horizon shuffle
+    reproduces the batch ``cusum`` exactly."""
+    return _buffered_fold_stream(
+        df, key_col, ts_col, units_col, tie_col, horizon_us,
+        watermark_delay_us, _cusum(target_units, slack_units),
     )

@@ -148,6 +148,30 @@ def test_column_profile_exact_more_columns_than_pool_workers(spark):
     assert out["c4"].min_str == "1.5" and out["c4"].max_str == "2.5"
 
 
+def test_column_profile_pool_jobs_keep_caller_job_group(spark):
+    """The exact tier runs its jobs on driver pool threads; each of
+    those jobs must carry the caller's job group, so none of them is
+    left without a group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    group = "test-column-profile-pool"
+    df = spark.createDataFrame(
+        [(1, "a", 1.5), (2, "b", None)], "c1 long, c2 string, c3 double"
+    )
+    bus.waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "column_profile pool threads")
+    try:
+        column_profile(df, ["c1", "c2", "c3"]).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    bus.waitUntilEmpty()
+    # one base job plus one distinct-count job per column, at least
+    assert len(tracker.getJobIdsForGroup(group)) >= 4
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+
+
 def test_column_profile_approx_relative_error(spark):
     """The 100 TB tier: approx=True swaps exact count_distinct for
     HLL++ (approx_count_distinct). Estimates must land within 5x the

@@ -6,6 +6,7 @@ like any late row."""
 
 import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from smartbots_etl_facturas_spark.operators.events import funnel_stages
@@ -170,14 +171,42 @@ def test_buffered_ewma_matches_batch_on_shuffled_delivery(spark, tmp_path):
     assert len(got) == sum(len(v) for v in data.values())
 
 
-def test_holt_stream_matches_batch(spark, tmp_path):
+@pytest.mark.parametrize("fold", ["holt", "ewma", "cusum"])
+def test_holt_stream_matches_batch(spark, tmp_path, fold):
     """Streaming Holt (applyInPandasWithState) == batch holt_linear:
     the (level, trend) pair carries across micro-batches and every
-    emission is an exact integer match."""
-    from smartbots_etl_facturas_spark.operators.timeseries import holt_linear
-    from smartbots_etl_facturas_spark.streaming.timeseries import (
-        holt_stateful,
-    )
+    emission is an exact integer match. Parametrized over the three
+    strict folds (Holt, EWMA, CUSUM) against their batch twins.
+
+    The last micro-batch crosses a batch boundary at equal ts: it
+    carries two rows at user 1's last folded timestamp. The one with
+    the larger event_id sorts after the folded row and is admitted;
+    the one with the smaller event_id sorts before it and is dropped,
+    so the batch twin runs over every row except that one."""
+    from smartbots_etl_facturas_spark.operators import timeseries as bt
+    from smartbots_etl_facturas_spark.streaming import timeseries as st
+
+    stream_fold, batch_fold, cols = {
+        "holt": (
+            lambda s: st.holt_stateful(s, tie_col="event_id"),
+            lambda ev: bt.holt_linear(ev, tie_col="event_id"),
+            ("level_units", "trend_units", "forecast_units"),
+        ),
+        "ewma": (
+            lambda s: st.ewma_stateful(s, tie_col="event_id"),
+            lambda ev: bt.ewma_smooth(ev, tie_col="event_id"),
+            ("ewma_units",),
+        ),
+        "cusum": (
+            lambda s: st.cusum_stateful(
+                s, target_units=300, tie_col="event_id"
+            ),
+            lambda ev: bt.cusum(
+                ev, "x_units", target_units=300, tie_col="event_id"
+            ),
+            ("cusum_units",),
+        ),
+    }[fold]
 
     schema = "user_id long, ts timestamp, event_id long, x_units long"
     data = {
@@ -187,26 +216,30 @@ def test_holt_stream_matches_batch(spark, tmp_path):
     rows = {
         u: [(u, _ts(m), m, x) for m, x in evs] for u, evs in data.items()
     }
+    admitted = (1, _ts(4), 9, 700)   # same ts as rows[1][4], larger tie
+    dropped = (1, _ts(4), 2, 333)    # same ts, smaller tie: late
     batches = [
         [rows[1][0], rows[1][1], rows[2][0]],
         [rows[1][2], rows[2][1], rows[2][2]],
         [rows[1][3], rows[1][4], rows[2][3]],
+        [dropped, admitted],
     ]
     got_rows = _drain(
-        spark, batches, schema, tmp_path,
-        lambda s: holt_stateful(s, tie_col="event_id"),
-        mode="append",
+        spark, batches, schema, tmp_path, stream_fold, mode="append",
     )
     got = {
-        (r.user_id, r.ts): (r.level_units, r.trend_units, r.forecast_units)
+        (r.user_id, r.ts, r.x_units): tuple(r[c] for c in cols)
         for r in got_rows
     }
-    ev = spark.createDataFrame([r for u in rows for r in rows[u]], schema)
+    ev = spark.createDataFrame(
+        [r for u in rows for r in rows[u]] + [admitted], schema
+    )
     want = {
-        (r.user_id, r.ts): (r.level_units, r.trend_units, r.forecast_units)
-        for r in holt_linear(ev, tie_col="event_id").collect()
+        (r.user_id, r.ts, r.x_units): tuple(r[c] for c in cols)
+        for r in batch_fold(ev).collect()
     }
-    assert got == want and len(got) == 9
+    assert got == want and len(got) == 10
+    assert (1, _ts(4), 333) not in got
 
 
 def test_bottom_k_sampler_stream_matches_batch(spark, tmp_path):
